@@ -69,11 +69,11 @@ def _set_bits(bits: np.ndarray, n_bits: int, h1: np.ndarray, h2: np.ndarray,
     costs ``n_bits`` bytes (8× the filter) — bounded because per-bucket
     filters are fixed-size by construction; above the cap (huge filter,
     tiny batch) fall back to the scatter so memory stays proportional
-    to the batch.  The plane size is ALSO absolutely capped at 512 MB
-    (n_bits = 2^32): for huge geometries (e.g. the auto-spool shape at
-    bloom_bits=1<<33) a large applyInPandas group could otherwise
-    allocate a multi-GiB plane per task executor-side however the
-    batch-size heuristic lands."""
+    to the batch.  The plane is ALSO absolutely capped at n_bits = 2^32,
+    i.e. 4 GiB of plane for a 512 MB filter: for larger geometries (e.g.
+    the auto-spool shape at bloom_bits=1<<33) a large applyInPandas
+    group would otherwise allocate an 8+ GiB plane per task
+    executor-side however the batch-size heuristic lands."""
     if h1.size and n_bits <= (1 << 32) and (
             n_bits <= (1 << 27) or h1.size * 64 >= n_bits):
         plane = np.zeros(bits.size * 8, np.bool_)

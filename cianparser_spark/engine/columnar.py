@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cianparser_spark.engine import model
+from cianparser_spark.engine.session import local_frame
 from cianparser_spark.semantics.extract import STREET_TYPES
 
 
@@ -78,7 +79,7 @@ def seed_dim(spark: SparkSession, runtimes: dict[int, dict]) -> DataFrame:
         (rt["seed_id"], rt["kind"], rt["deal"], rt["location"], rt["suburban_type"])
         for rt in runtimes.values()
     ]
-    return spark.createDataFrame(rows, SEED_DIM_SCHEMA)
+    return local_frame(spark, rows, SEED_DIM_SCHEMA)
 
 
 # --------------------------------------------------------- layer builders

@@ -51,6 +51,7 @@ from pyspark.sql import types as T
 from cianparser_spark.corpus import webgen
 from cianparser_spark.engine import columnar, model, seenidx
 from cianparser_spark.engine.bloom import BloomFilter
+from cianparser_spark.engine.session import local_frame
 from cianparser_spark.engine.stage import make_fetch_parse
 from cianparser_spark.engine.store import WaveStore
 from cianparser_spark.semantics import robots
@@ -59,6 +60,24 @@ from cianparser_spark.semantics.simulator import CrawlSeed
 MAX_ATTEMPTS = 3  # (reference: cianparser/cianparser.py:73)
 _BLOOM_BITS = 1 << 20  # per-bucket fixed size so blobs OR-merge
 _429_DEBT = 5  # 10 s penalty / 2 s-per-list-token
+
+# Pages per fetch-kernel task.  Every task that runs a Python worker
+# pays a fixed ~0.2 slot-seconds however little it does (4-core box,
+# workers reused: an identity mapInPandas took 1.36 s over 16
+# partitions and 0.45 s over 4), while the kernel itself spends ~0.2 ms
+# a page.  Below 256 pages a task is mostly that fixed cost.
+_PAGES_PER_KERNEL_TASK = 256
+
+
+def kernel_tasks(n_pages: int, n_keys: int, dp: int) -> int:
+    """Fetch-kernel task count for a wave of ``n_pages`` frontier rows
+    hash-partitioned on ``n_keys`` distinct keys at default parallelism
+    ``dp``: about one task per ``_PAGES_PER_KERNEL_TASK`` pages, at
+    least one per core while there are keys to spread, at most 4 per
+    core (and never more than keys, which would only add empty tasks).
+    Waves of 4·dp·256 pages or more get the 4·dp cap."""
+    want = -(-n_pages // _PAGES_PER_KERNEL_TASK)
+    return max(1, min(dp, n_keys), min(4 * dp, n_keys, want))
 
 
 class CrawlEngine:
@@ -298,8 +317,9 @@ class CrawlEngine:
             rows.append((s.seed_id, prefix, suffix, host, rt["start_page"], rt["end_page"]))
             total += rt["end_page"] - rt["start_page"] + 1
         self._next_pending = total
-        seeds_df = self.spark.createDataFrame(
-            rows, "seed_id long, prefix string, suffix string, host string, start long, end long"
+        seeds_df = local_frame(
+            self.spark, rows,
+            "seed_id long, prefix string, suffix string, host string, start long, end long"
         )
         return seeds_df.select(
             "seed_id", "prefix", "suffix", "host",
@@ -505,8 +525,8 @@ class CrawlEngine:
             first_keys = ["\x1f".join(str(x) for x in r) for r in first_rows]
             df = df.withColumn("_is_first", row_key.isin(first_keys))
         else:  # many over-budget hosts: broadcast-join fallback
-            fdf = self.spark.createDataFrame(
-                first_rows,
+            fdf = local_frame(
+                self.spark, first_rows,
                 "host string, _f_pn long, _f_kr int, _f_sid long, _f_ci long, _f_url string")
             df = df.join(F.broadcast(fdf), "host") \
                 .withColumn(
@@ -585,8 +605,8 @@ class CrawlEngine:
             for sid, rt in self.runtimes.items():
                 prefix, suffix = rt["template"].split("{}", 1)
                 rows.append((sid, prefix, suffix, rt["template"].split("/")[2]))
-            self._seeds_df = self.spark.createDataFrame(
-                rows, "seed_id long, prefix string, suffix string, host string")
+            self._seeds_df = local_frame(
+                self.spark, rows, "seed_id long, prefix string, suffix string, host string")
         return self._seeds_df
 
     def _detail_ledger(self, wave: int, ks_delta: list[tuple],
@@ -618,8 +638,8 @@ class CrawlEngine:
         if self._ks_nonempty:
             ks_parts.append(self.store.read("keystate"))
         if ks_delta:
-            ks_parts.append(self.spark.createDataFrame(
-                ks_delta,
+            ks_parts.append(local_frame(
+                self.spark, ks_delta,
                 "seed_id long, key string, url string, consumed long, state string, ver long"))
         ks_live = None
         if ks_parts:
@@ -707,8 +727,8 @@ class CrawlEngine:
                 bdf = self._parked_view().select(
                     "seed_id", F.col("key").alias("_k"))
                 if paused_parked:
-                    bdf = bdf.unionByName(self.spark.createDataFrame(
-                        list(paused_parked), "seed_id long, _k string"))
+                    bdf = bdf.unionByName(local_frame(
+                        self.spark, paused_parked, "seed_id long, _k string"))
                 bdf = bdf.distinct().withColumn("_blk", F.lit(True))
                 j = j.join(bdf, ["seed_id", "_k"], "left")
             else:
@@ -723,8 +743,8 @@ class CrawlEngine:
                         F.when(F.concat_ws("\x1f", F.col("seed_id"), F.col("_k"))
                                .isin(bkeys), F.lit(True)))
                 elif blocked:  # huge parked set: broadcast-join fallback
-                    bdf = self.spark.createDataFrame(
-                        list(blocked), "seed_id long, _k string") \
+                    bdf = local_frame(
+                        self.spark, blocked, "seed_id long, _k string") \
                         .withColumn("_blk", F.lit(True))
                     j = j.join(F.broadcast(bdf), ["seed_id", "_k"], "left")
                 else:
@@ -763,8 +783,8 @@ class CrawlEngine:
                 F.concat_ws("|", F.col("seed_id"), F.col("page_number")), "long")
             if burn_col is None:
                 burn_rows = [(sid, pn, b) for (sid, pn), b in self._page_burn.items()]
-                burn_df = self.spark.createDataFrame(
-                    burn_rows, "seed_id long, page_number long, _burn long")
+                burn_df = local_frame(
+                    self.spark, burn_rows, "seed_id long, page_number long, _burn long")
                 grp = grp.join(F.broadcast(burn_df), ["seed_id", "page_number"], "left")
             else:
                 grp = grp.withColumn("_burn", burn_col)
@@ -848,8 +868,8 @@ class CrawlEngine:
             use_isin = len(b_keys) <= self._LIT_LOOKUP_MAX
             ckey = F.concat_ws("\x1f", F.col("seed_id"), F.col("key"))
             lits = [f"{s}\x1f{k}" for s, k in b_keys]
-            kdf = (None if use_isin else self.spark.createDataFrame(
-                list(b_keys), "seed_id long, key string"))
+            kdf = (None if use_isin else local_frame(
+                self.spark, b_keys, "seed_id long, key string"))
             spoolx = (self.bloom_spool and self._seen_nonempty
                       and self._seenx_usable())
             if spoolx:
@@ -915,8 +935,8 @@ class CrawlEngine:
                 if len(b_keys) <= self._LIT_LOOKUP_MAX:
                     pv = pv.filter(pk.isin(plits))
                 else:
-                    kdf2 = self.spark.createDataFrame(
-                        list(b_keys), "seed_id long, key string")
+                    kdf2 = local_frame(
+                        self.spark, b_keys, "seed_id long, key string")
                     pv = pv.join(F.broadcast(kdf2), ["seed_id", "key"],
                                  "left_semi")
                 for r in (pv.groupBy("seed_id", "key")
@@ -980,7 +1000,7 @@ class CrawlEngine:
                 self._parked_readds += [(k, sid, pn) for k in sorted(ph)]
             elif ph:
                 self._parked_disp[(sid, pn)] = ph
-        cont_df = (self.spark.createDataFrame(cont_rows, model.FRONTIER_SCHEMA)
+        cont_df = (local_frame(self.spark, cont_rows, model.FRONTIER_SCHEMA)
                    if cont_rows else None)
         return cont_df, conv_rows
 
@@ -1194,7 +1214,7 @@ class CrawlEngine:
         self._seenx_ok = None
         self.store.commit_wave(
             marker,
-            appends={"frontier": self.spark.createDataFrame(rows, model.FRONTIER_SCHEMA)},
+            appends={"frontier": local_frame(self.spark, rows, model.FRONTIER_SCHEMA)},
             replaces={
                 "offers": offers_cur.filter(~cond),
                 "seen": new_seen,
@@ -1279,7 +1299,10 @@ class CrawlEngine:
             .select(*[f.name for f in model.FRONTIER_SCHEMA.fields])
         )
 
-        # 2-4 tasks per core for load balance; spool the stage to parquet
+        # Kernel tasks are sized by work (kernel_tasks): each Python task
+        # costs ~0.2 slot-s of fixed overhead, so small waves get one
+        # task per core and only waves past 4·dp·256 pages reach the
+        # 4-per-core load-balancing cap.  The stage spools to parquet
         # instead of caching wide rows on the JVM heap — every downstream
         # consumer (outcome stats, retry frames, card finalization) then
         # reads a column-pruned native columnar scan instead of re-walking
@@ -1287,7 +1310,6 @@ class CrawlEngine:
         # breaks scaling at high core counts disappears.  On a real
         # cluster this spool is the per-wave shuffle/staging file.
         dp = self.spark.sparkContext.defaultParallelism
-        par = max(1, min(4 * dp, (n_selected + 63) // 64))
         spool = os.path.join(self.store.root, "scratch", f"stage-w{wave:05d}")
         # The wave's first-wins dedup has two physical strategies:
         #
@@ -1323,9 +1345,8 @@ class CrawlEngine:
                          F.coalesce("price", "price_per_month"))).alias("avg_price"),
         )
         if map_only:
-            par_k = max(1, min(4 * dp, n_seeds))
             raw = (
-                selected.repartition(par_k, "seed_id")
+                selected.repartition(kernel_tasks(n_selected, n_seeds, dp), "seed_id")
                 .sortWithinPartitions("seed_id", "page_number", "card_index")
                 .mapInPandas(
                     make_fetch_parse(self.runtimes, self.web_cfg, in_wave_dedup=True,
@@ -1340,7 +1361,8 @@ class CrawlEngine:
             )
         else:
             raw = (
-                selected.repartition(par, "host", "url")
+                selected.repartition(kernel_tasks(n_selected, n_selected, dp),
+                                     "host", "url")
                 .mapInPandas(make_fetch_parse(self.runtimes, self.web_cfg,
                                               respect_robots=self.respect_robots),
                              model.RAW_STAGE_SCHEMA)
@@ -1571,9 +1593,8 @@ class CrawlEngine:
                 if min_pending:
                     wm_col = self._lit_map(wm, F.col("seed_id"), "long")
                     if wm_col is None:  # many-seed fallback: broadcast join
-                        wm_df = self.spark.createDataFrame(
-                            [(sid, w) for sid, w in wm.items()], "seed_id long, wm long"
-                        )
+                        wm_df = local_frame(
+                            self.spark, wm.items(), "seed_id long, wm long")
                         staged = staged.join(F.broadcast(wm_df), "seed_id", "left")
                     else:
                         staged = staged.withColumn("wm", wm_col)
@@ -1664,8 +1685,8 @@ class CrawlEngine:
             if cont_df is not None:
                 frontier_parts.append(cont_df)
             if conv_rows:
-                conv_df = self.spark.createDataFrame(
-                    conv_rows,
+                conv_df = local_frame(
+                    self.spark, conv_rows,
                     "seed_id long, key string, url string, consumed long, state string, ver long"
                 ).select(*[f.name for f in model.KEYSTATE_SCHEMA.fields])
                 ks_replace = (conv_df if ks_replace is None
@@ -1695,7 +1716,7 @@ class CrawlEngine:
         if dead_pages:
             appends["dead"] = dead_df
         if dead_group_rows:
-            dg = self.spark.createDataFrame(dead_group_rows, model.DEAD_SCHEMA)
+            dg = local_frame(self.spark, dead_group_rows, model.DEAD_SCHEMA)
             appends["dead"] = (
                 appends["dead"].unionByName(dg) if "dead" in appends else dg
             )
@@ -2074,16 +2095,13 @@ class CrawlEngine:
         Transition-wave state rides ``_parked_spill_rows`` instead (the
         table isn't committed yet)."""
         if self._parked_spill_rows is not None:
-            pt = self.spark.createDataFrame(
-                self._parked_spill_rows or
-                [("", -1, -1)], model.PARKREG_SCHEMA)
-            if not self._parked_spill_rows:
-                pt = pt.filter(F.lit(False))
+            pt = local_frame(self.spark, self._parked_spill_rows,
+                             model.PARKREG_SCHEMA)
         else:
             pt = self.store.read("parkreg")
         if self._parked_removed:
-            rm = self.spark.createDataFrame(
-                sorted(self._parked_removed), "seed_id long, page_number long")
+            rm = local_frame(
+                self.spark, sorted(self._parked_removed), "seed_id long, page_number long")
             pt = pt.join(F.broadcast(rm), ["seed_id", "page_number"],
                          "left_anti")
         # captcha-stop cancellation, the DF twin of the dict-mode
@@ -2106,8 +2124,8 @@ class CrawlEngine:
             parts.append(self._parked_add_df.select(
                 "key", "seed_id", "page_number"))
         if self._parked_readds:
-            parts.append(self.spark.createDataFrame(
-                self._parked_readds, model.PARKREG_SCHEMA))
+            parts.append(local_frame(
+                self.spark, self._parked_readds, model.PARKREG_SCHEMA))
         pt = parts[0]
         for p in parts[1:]:
             pt = pt.unionByName(p)

@@ -272,8 +272,7 @@ def compact(spark, root: str, n_buckets: int, min_runs: int = 8) -> int:
     (POSIX unlink keeps the mapping alive) — the next listing
     generation picks up the compacted layout.
     """
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
+    from cianparser_spark.engine.session import local_frame
 
     todo = []
     for d in sorted(os.listdir(root)) if os.path.isdir(root) else []:
@@ -297,16 +296,18 @@ def compact(spark, root: str, n_buckets: int, min_runs: int = 8) -> int:
                 parts = [np.fromfile(p, dtype="<i8") for p in runs]
                 merged = np.sort(np.concatenate(parts)) if parts else \
                     np.empty(0, dtype="<i8")
-                tmp = os.path.join(full, f".tmp-{uuid.uuid4().hex}")
+                # a fresh name per compaction: the memmap cache is keyed
+                # by path, so reusing one would serve a stale inode
+                uid = uuid.uuid4().hex
+                tmp = os.path.join(full, f".tmp-{uid}")
                 merged.astype("<i8").tofile(tmp)
-                os.replace(tmp, os.path.join(full, "run-compacted.keys"))
+                os.replace(tmp, os.path.join(full, f"run-compacted-{uid}.keys"))
                 for p in runs:
-                    if not p.endswith("run-compacted.keys"):
-                        os.unlink(p)
+                    os.unlink(p)
                 n += 1
             yield pd.DataFrame({"n": [n]})
 
-    df = spark.createDataFrame([(d,) for d in todo], "dir string") \
+    df = local_frame(spark, [(d,) for d in todo], "dir string") \
         .repartition(len(todo))
     res = df.mapInPandas(merge, "n long").groupBy().sum("n").collect()
     return int(res[0][0] or 0)

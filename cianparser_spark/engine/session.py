@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -52,19 +53,56 @@ def get_spark(
     # only when /dev/shm is writable AND has >= 8 GiB free (Docker's
     # default 64 MB /dev/shm would otherwise fail shuffle spills that
     # plain disk handles fine, and crashed runs would pin RAM).
+    # The chosen root is created here, not left to Spark: with
+    # SPARK_LOCAL_DIRS set Spark ignores spark.local.dir and never
+    # creates it, yet driver-side spools (ops/sampling.py) still
+    # mkdtemp under the conf value.
     scratch = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if scratch:
-        builder = builder.config("spark.local.dir", scratch)
-    elif os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+    if not scratch and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         try:
             st = os.statvfs("/dev/shm")
             free_bytes = st.f_bavail * st.f_frsize
         except OSError:
             free_bytes = 0
         if free_bytes >= 8 << 30:
-            builder = builder.config("spark.local.dir", "/dev/shm/spark-scratch")
+            scratch = "/dev/shm/spark-scratch"
+    if scratch:
+        for d in scratch.split(","):
+            os.makedirs(d.strip(), exist_ok=True)
+        builder = builder.config("spark.local.dir", scratch)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def arrow_table(rows, schema: T.StructType):
+    """Driver rows (tuples in schema order, or dicts by field name) as
+    a ``pyarrow.Table`` typed by the Spark schema's own Arrow mapping."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    if rows and isinstance(rows[0], dict):
+        cols = [[r.get(n) for r in rows] for n in pa_schema.names]
+    else:
+        cols = list(zip(*rows)) or [()] * len(pa_schema)
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
+        schema=pa_schema)
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """The one way the engine turns driver-held rows into a DataFrame.
+
+    ``spark.createDataFrame(<python list>)`` plans as a Python RDD
+    scan, so every action over it launches Python-worker tasks (about
+    0.2 slot-seconds each on a 4-core box, even for 3 rows).  An Arrow
+    table plans as a ``LocalTableScan``: the rows travel with the plan
+    and no Python task runs.  ``schema`` is a StructType or a DDL
+    string."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

@@ -33,6 +33,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from cianparser_spark.engine.session import arrow_table, local_frame
+
 
 class ConcurrentCommitError(RuntimeError):
     """A commit published a new snapshot while a maintenance rewrite
@@ -143,28 +145,15 @@ class WaveStore:
             return self._write_local(name, rows, schema, wave)
         return self._write(name, df, wave)
 
-    _PA_TYPES = {"string": "string", "bigint": "int64", "double": "float64",
-                 "boolean": "bool_", "binary": "binary"}
-
     def _write_local(self, name: str, rows, schema: T.StructType, wave: int) -> str | None:
         if not rows:
             return None
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        names = [f.name for f in schema.fields]
-        if isinstance(rows[0], dict):
-            cols = {n: [r.get(n) for r in rows] for n in names}
-        else:
-            cols = {n: [r[i] for r in rows] for i, n in enumerate(names)}
-        arrays = [
-            pa.array(cols[f.name], type=getattr(pa, self._PA_TYPES[f.dataType.simpleString()])())
-            for f in schema.fields
-        ]
         rel = os.path.join("data", name, f"w{wave:05d}-{uuid.uuid4().hex[:8]}")
         absdir = os.path.join(self.root, rel)
         os.makedirs(absdir, exist_ok=True)
-        pq.write_table(pa.Table.from_arrays(arrays, names=names),
+        pq.write_table(arrow_table(rows, schema),
                        os.path.join(absdir, "part-00000.parquet"))
         return rel
 
@@ -263,7 +252,7 @@ class WaveStore:
             paths = [os.path.join(self.root, d) for d in dirs]
             cur = self.spark.read.schema(schema).parquet(*paths)
         else:
-            cur = self.spark.createDataFrame([], schema)
+            cur = local_frame(self.spark, [], schema)
         keys = upd.select(*key_cols).distinct()
         # Iceberg's cardinality rule: more than one source row per key
         # is an error ("multiple source rows matched"), never a silent
@@ -351,7 +340,7 @@ class WaveStore:
         dirs = manifest["tables"].get(name, [])
         schema = self.schemas[name]
         if not dirs:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         paths = [os.path.join(self.root, d) for d in dirs]
         return self.spark.read.schema(schema).parquet(*paths)
 
@@ -412,6 +401,6 @@ class WaveStore:
         appended = [d for d in new if d not in set(old)]
         schema = self.schemas[name]
         if not appended:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         paths = [os.path.join(self.root, d) for d in appended]
         return self.spark.read.schema(schema).parquet(*paths)

@@ -22,7 +22,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from cianparser_spark.bench_crawl import build_snapshot  # noqa: E402
 
@@ -40,7 +41,7 @@ def launch(cpus: int, cpu_list: str, bdir: str, snap: str,
         cmd = [pin, "-c", cpu_list] + cmd
     return subprocess.Popen(cmd, stdout=subprocess.PIPE,
                             stderr=subprocess.DEVNULL, text=True,
-                            cwd="/root/repo")
+                            cwd=REPO)
 
 
 def main() -> None:
@@ -96,7 +97,11 @@ def main() -> None:
                 if pin and cpu_list:
                     cmd = [pin, "-c", cpu_list] + cmd
                 r = subprocess.run(cmd, capture_output=True, text=True,
-                                   timeout=3600, cwd="/root/repo")
+                                   timeout=3600, cwd=REPO)
+                if r.returncode != 0:
+                    raise RuntimeError(
+                        f"bench_crawl --cpus {cpus} exited {r.returncode}:\n"
+                        f"{r.stderr}")
                 return json.loads(r.stdout.strip().splitlines()[-1])
 
             snap_dir2 = tempfile.mkdtemp(prefix="mj_snap2_", dir=snap_root)

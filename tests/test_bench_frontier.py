@@ -119,6 +119,35 @@ def test_seenidx_multi_run_and_compaction(spark, tmp_path):
     assert _checksum(got2) == _checksum(oracle)
 
 
+def test_seenidx_second_compaction_in_warm_process(spark, tmp_path):
+    """Two compactions in one process: probing after the first caches
+    the compacted run's memmap, so the second must publish under a new
+    name or the probe keeps reading the first run's stale inode and
+    reports the second compaction's keys as fresh."""
+    import numpy as np
+
+    from cianparser_spark.engine import seenidx
+
+    nb = 4
+    cand = _candidates(spark, 3000, 4).cache()
+    root = str(tmp_path / "idx")
+    seenidx.write_runs(cand.filter("id % 3 = 0").select("key"), root, nb, "w0")
+    seenidx.write_runs(cand.filter("id % 3 = 1").select("key"), root, nb, "w1")
+    assert seenidx.compact(spark, root, nb, min_runs=2) == nb
+
+    def seen_in_driver(where, gen):
+        keys = np.array([r["key"] for r in cand.filter(where).collect()],
+                        dtype=np.int64)
+        return seenidx.probe_runs((root,), gen, keys,
+                                  seenidx.bucket_i64(keys, nb))
+
+    assert seen_in_driver("id % 3 = 0", 1).all()  # warms the memmap cache
+    seenidx.write_runs(cand.filter("id % 3 = 2").select("key"), root, nb, "w2")
+    assert seenidx.compact(spark, root, nb, min_runs=2) == nb
+    assert seen_in_driver("id % 3 = 2", 2).all()
+    assert seen_in_driver("id % 3 = 0", 2).all()
+
+
 def test_seenidx_saturated_bloom_exactness(spark, frames, tmp_path):
     """Exactness must ride the sorted runs, not the Bloom: with a
     fully saturated Bloom tier (every probe answers maybe-seen) the

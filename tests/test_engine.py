@@ -46,6 +46,21 @@ def test_bitmatch_multiseed_with_faults(spark, tmp_run_dir):
     _bit_match(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=16)
 
 
+def test_bitmatch_seeds_share_kernel_tasks(spark, tmp_run_dir):
+    """A small wave runs one fetch-kernel task per core, so with more
+    seeds than cores several seeds' pages go through one task (its
+    in-wave dedup set must stay per seed) and the output still
+    bit-matches."""
+    combos = [(c, r) for c in ("Москва", "Казань", "Сочи")
+              for r in (1, 2, 3, "studio")]
+    seeds = [CrawlSeed(i + 1, c, "flat", "sale", rooms=r,
+                       additional_settings={"end_page": 2})
+             for i, (c, r) in enumerate(combos)]
+    _, eng = _bit_match(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=64)
+    pids = {r["partition_id"] for r in eng.store.read("lineage").collect()}
+    assert 1 <= len(pids) <= spark.sparkContext.defaultParallelism < len(seeds)
+
+
 def test_bitmatch_minby_dedup_path(spark, tmp_run_dir):
     """dedup_broadcast_rows=0 forces the large-wave min_by fallback;
     it must produce the identical crawl-ordered output as the
